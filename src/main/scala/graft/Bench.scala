@@ -19,8 +19,8 @@ object Bench {
     "q_cosine_topk", "q_text_stats", "q_tfidf", "q_udaf_topk",
     "q_expr_laptime")
 
-  /** Every non-headline registry key, reported under `extended` — informational
-    * visibility for the newer surface without touching the frozen
+  /** Every non-headline registry key, sorted, reported under `extended`
+    * — informational visibility for the newer surface without touching the frozen
     * headline set or its cross-round comparable total. The shared
     * durable tables (graph co-purchase edges, dedup cluster map) are
     * materialized and timed FIRST as their own `_derive_*` entries, so
@@ -33,225 +33,8 @@ object Bench {
     * masquerade as a regression, while sub-0.5 s keys stay single-shot
     * to keep the sweep bounded.
     */
-  val extended: Seq[String] = Seq(
-    "q_triangles", "q_pagerank", "q_assoc_rules", "q_graph_bfs",
-    "q_cohort_retention",
-    "q_decay_wavg", "q_markov_transitions", "q_zorder", "q_funnel",
-    "q_skyline", "q_label_centroids", "q_mad_outliers", "q_exact_median",
-    "q_merge_into", "q_snapshot_diff", "q_join_interval", "q_hll_merge",
-    "q_theta_retention", "q_approx_topk", "q_twap", "q_xml_source",
-    "q_seq_pattern", "q_rfm",
-    "q_sql_tpch_q1", "q_sql_tpch_q6", "q_sql_tpch_q10", "q_sql_tpch_q8",
-    "q_interval_union", "q_id_gaps", "q_equidepth_hist", "q_ivm_join",
-    "q_kll_quantiles", "q_attribution", "q_period_over_period",
-    "q_schema_evolution", "q_dedup_representatives",
-    "q_linreg_trend", "q_autocorr", "q_winsorize", "q_gini",
-    "q_text_normalize", "q_bigram_lm", "q_sample_bottomk",
-    "q_weighted_sample", "q_window_dist", "q_chisq_contingency",
-    "q_running_distinct", "q_psi_drift", "q_time_spine",
-    "q_binaryfile_source", "q_spearman", "q_mode",
-    "q_welch_ttest", "q_benford", "q_dow_profile", "q_anomaly_days",
-    "q_bpe_pairs", "q_pmi_cooccur", "q_vocab_spectrum",
-    "q_dedup_containment", "q_knn_label", "q_centroid_dist",
-    "q_emb_variance", "q_degree_dist", "q_clustering_coeff",
-    "q_scd2_asof", "q_interval_prorate",
-    "q_new_vs_returning", "q_stickiness", "q_active_streaks",
-    "q_inter_event", "q_perplexity_lm", "q_silhouette", "q_pareto_share",
-    "q_string_index", "q_target_encode", "q_common_neighbors",
-    "q_covariance_matrix", "q_mutual_info", "q_survival",
-    "q_conversion_ci", "q_funnel_window", "q_seasonal_decompose",
-    "q_changepoint", "q_trimmed_mean", "q_weighted_median",
-    "q_class_weights", "q_multimodal_decode",
-    "q_doc_filter", "q_source_stats", "q_oov_rate", "q_ngram_novelty",
-    "q_phrase_search", "q_hard_negatives", "q_join_nearest",
-    "q_assortativity", "q_token_budget_mix", "q_diff_in_diff",
-    "q_seasonal_naive_eval", "q_burstiness", "q_stream_topk",
-    "q_cluster_sizes", "q_sql_window", "q_grouped_regression",
-    "q_cohort_revenue", "q_peak_concurrency", "q_boilerplate_ngrams",
-    "q_freshness", "q_emb_norm_profile", "q_cycle_time",
-    "q_basket_size_dist", "q_emb_quantize",
-    "q_ks_test", "q_cramers_v", "q_abc_classes", "q_acf_lags",
-    "q_dup_rate_by_source", "q_cross_source_overlap",
-    "q_tokenizer_fertility", "q_theil_sen", "q_ref_integrity",
-    "q_dim_corr", "q_stream_dedup", "q_sql_groupby_all", "q_sql_values",
-    "q_sql_pivot", "q_ndcg", "q_top_paths", "q_feature_assembly",
-    "q_entity_clusters", "q_kcore",
-    "q_mann_kendall", "q_kendall_tau", "q_cuped", "q_hits",
-    "q_label_prop", "q_heaps_law", "q_zipf_slope",
-    "q_max_drawdown", "q_bollinger", "q_rsi", "q_rolling_corr", "q_obv",
-    "q_stratified_split", "q_kfold_assign", "q_onehot", "q_minmax_scale",
-    "q_quantile_normalize", "q_feature_hash", "q_mrr", "q_precision_at_k",
-    "q_jaccard_neighbors", "q_partition_skew", "q_multimodal_phash",
-    "q_langid_eval", "q_adamic_adar", "q_union_by_name",
-    "q_compaction_bins", "q_bootstrap_ci", "q_top_eigenvector",
-    "q_k_anonymity", "q_l_diversity", "q_confusion_matrix",
-    "q_calibration", "q_lead_lag_corr", "q_star_join", "q_naive_bayes",
-    "q_sql_order_by_all", "q_interpolate", "q_countmin", "q_tfidf_cosine",
-    "q_kmeans", "q_keyphrases", "q_hist2d", "q_token_dropout",
-    "q_curriculum_order", "q_rare_collapse",
-    "q_hhi", "q_odds_ratio", "q_mcnemar", "q_cohens_kappa", "q_ewma",
-    "q_ams_f2", "q_ppr", "q_ppl_filter", "q_dedup_eval", "q_dedup_prefix",
-    "q_rolling_median", "q_conductance", "q_multimodal_wav",
-    "q_attribution_position", "q_hour_dow_heatmap", "q_dataset_card",
-    "q_emb_dedup_eval", "q_skew_kurt", "q_geomean", "q_span_mask",
-    "q_sql_distinct_on", "q_cochran_armitage", "q_neyman_alloc",
-    "q_audio_features", "q_best_split", "q_hill_tail", "q_js_divergence",
-    "q_lorenz_curve", "q_bhattacharyya", "q_markov_stationary",
-    "q_sql_unpivot", "q_attribution_shapley", "q_rbo", "q_bpe_merge",
-    "q_cluster_topics", "q_dp_histogram", "q_join_asof_native",
-    "q_simpson_diversity", "q_sql_filter_clause", "q_join_asof_fwd",
-    "q_sql_qualify", "q_lambda_funcs", "q_multimodal_phash_near",
-    "q_multimodal_bmp", "q_multimodal_dispatch", "q_multimodal_png",
-    "q_join_asof_tiebreak", "q_join_asof_salted",
-    "q_sql_tpch_q2", "q_sql_tpch_q9", "q_sql_tpch_q11",
-    "q_sql_tpch_q16", "q_sql_tpch_q20", "q_stream_asof_wm",
-    "q_parse_funcs", "q_countmin_native", "q_multimodal_jpeg",
-    "q_scale_fold",
-    "q_scale_fold_emb",
-    // registry-wide since r7: every remaining key timed once so NO
-    // operator ships unbenchmarked (the mid-generation r2-r4 keys)
-    "q_ab_srm",
-    "q_ann_ivf",
-    "q_ann_ivf_exhaustive",
-    "q_ann_lsh",
-    "q_ann_pq",
-    "q_ann_ivfpq",
-    "q_ann_ivfpq_read",
-    "q_ivfpq_cell_stats",
-    "q_ann_ivfpq_delete",
-    "q_ann_ivfpq_delete_stats",
-    "q_ann_ivfpq_retrain",
-    "q_ann_ivfpq_append",
-    "q_ann_ivfpq_shard_merge",
-    "q_stream_ann_ingest",
-    "q_stream_ann_ingest_wide",
-    "q_stream_ann_delete",
-    "q_stream_ann_query",
-    "q_stream_ann_recall",
-    "q_ann_ivf_incremental",
-    "q_ann_recall_eval",
-    "q_ann_param_sweep",
-    "q_stream_emb_gate",
-    "q_pq_distortion",
-    "q_stream_ingest_gate",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_array_funcs",
-    "q_bitwise_agg",
-    "q_bm25",
-    "q_cast",
-    "q_cdc_apply",
-    "q_chunk_tokens",
-    "q_coalesce",
-    "q_concat_key",
-    "q_cond_agg",
-    "q_csv_source",
-    "q_cube",
-    "q_current_ts",
-    "q_data_contract",
-    "q_date_format",
-    "q_datetime_funcs",
-    "q_decontaminate",
-    "q_dedup_clusters",
-    "q_dedup_incremental",
-    "q_dedup_ngram",
-    "q_dedup_simhash",
-    "q_derived_column",
-    "q_distinct",
-    "q_domain_mix",
-    "q_dropna",
-    "q_dsv2_source",
-    "q_element_at",
-    "q_entropy",
-    "q_except",
-    "q_except_all",
-    "q_explode",
-    "q_filter_bool",
-    "q_fingerprint",
-    "q_fingerprint_rolling",
-    "q_fuzzy_match",
-    "q_gains_deciles",
-    "q_groupby_max",
-    "q_grouping_sets",
-    "q_histogram",
-    "q_incr_agg",
-    "q_intersect",
-    "q_intersect_all",
-    "q_join_anti",
-    "q_join_bloom",
-    "q_join_full",
-    "q_join_left",
-    "q_join_nullsafe",
-    "q_join_range",
-    "q_join_right",
-    "q_join_semi",
-    "q_join_theta",
-    "q_json_explode",
-    "q_json_source",
-    "q_keep_latest",
-    "q_lang_agg",
-    "q_lang_id",
-    "q_limit",
-    "q_map_funcs",
-    "q_math_funcs",
-    "q_multimodal_frames",
-    "q_multimodal_meta",
-    "q_orc_source",
-    "q_orderby",
-    "q_overwrite_refresh",
-    "q_pack_sequences",
-    "q_percentile",
-    "q_pii_mask",
-    "q_pivot",
-    "q_profile",
-    "q_quality_score",
-    "q_rank_auc",
-    "q_regex_funcs",
-    "q_repetition_filter",
-    "q_rrf_fusion",
-    "q_sample_split",
-    "q_scd2",
-    "q_sessionize",
-    "q_sql_correlated",
-    "q_sql_cte",
-    "q_sql_lateral",
-    "q_sql_recursive",
-    "q_sql_scalar_subquery",
-    "q_sql_tpch_q12",
-    "q_sql_tpch_q13",
-    "q_sql_tpch_q14",
-    "q_sql_tpch_q15",
-    "q_sql_tpch_q17",
-    "q_sql_tpch_q18",
-    "q_sql_tpch_q19",
-    "q_sql_tpch_q21",
-    "q_sql_tpch_q22",
-    "q_sql_tpch_q4",
-    "q_sql_tpch_q5",
-    "q_sql_tpch_q7",
-    "q_stats_moments",
-    "q_stopword_filter",
-    "q_stream_sliding",
-    "q_stream_users",
-    "q_string_agg",
-    "q_string_funcs",
-    "q_temperature_mix",
-    "q_text_source",
-    "q_time_format",
-    "q_token_count",
-    "q_top_ngrams",
-    "q_try_arith",
-    "q_typed_agg",
-    "q_udf_laptime",
-    "q_unpivot",
-    "q_variant",
-    "q_versioned_read",
-    "q_when_otherwise",
-    "q_window_fill",
-    "q_window_lag",
-    "q_window_misc",
-    "q_window_range",
-    "q_zscore_outliers")
+  val extended: Seq[String] =
+    (SparkEntry.queries.keySet -- headline).toSeq.sorted
 
   /** Flat `"field":{"k":1.2,...}` map extracted from a committed bench
     * artifact — the cross-round comparison input for
@@ -506,10 +289,9 @@ object Bench {
     // session re-reads them instead of re-deriving), and a System.gc()
     // pause before each re-run sample keeps the median's inputs from
     // paying the preceding sample's garbage.
-    val extAll = extended.filter(SparkEntry.queries.contains)
     val extBlocks = 4
-    val blockSize = (extAll.size + extBlocks - 1) / extBlocks
-    val extFirst = extAll.grouped(blockSize).toSeq.flatMap { block =>
+    val blockSize = (extended.size + extBlocks - 1) / extBlocks
+    val extFirst = extended.grouped(blockSize).toSeq.flatMap { block =>
       spark.stop()
       spark = newSession()
       probeSeg(s"block@${block.head}")

@@ -6,8 +6,10 @@ import org.apache.spark.sql.SparkSession
   * engine expects — UTC (oracle/interchange parity), AQE on (runtime
   * re-planning, skew handling), shuffle parallelism matched to the
   * target rather than the 200 default, and the graft function extensions
-  * injected. On a cluster, `shufflePartitions` should be ~2-3× total
-  * executor cores; locally, the core count.
+  * injected (plus the UDF/UDAF demos, and anything the extensions could
+  * not inject because `getOrCreate` returned an existing session). On a
+  * cluster, `shufflePartitions` should be ~2-3× total executor cores;
+  * locally, the core count.
   */
 object Graft {
   def session(appName: String = "graft",

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -51,6 +53,10 @@ case class JaccardSorted(left: Expression, right: Expression)
 }
 
 object JaccardSorted {
+  /** Typed Column builder (`jaccard_sorted` without the SQL registry). */
+  def apply(a: Column, b: Column): Column =
+    column(new JaccardSorted(expression(a), expression(b)))
+
   /** Merge-count intersection of two sorted distinct string arrays. */
   def jaccard(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()

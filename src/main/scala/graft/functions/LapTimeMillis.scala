@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * version is already codegen-friendly; this exists as the engine's
   * demonstration of a native Catalyst scalar extension (SURVEY.md §4.3):
   * one static Java call instead of a concat/lpad expression tree,
-  * null-safe via UnaryExpression's default null handling, registered for
-  * SQL use by [[Udfs.registerAll]].
+  * null-safe via UnaryExpression's default null handling, reaching SQL
+  * through [[NativeFunctions.table]].
   */
 case class LapTimeMillis(child: Expression)
     extends UnaryExpression {

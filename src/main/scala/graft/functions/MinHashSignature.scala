@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -46,6 +48,10 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 }
 
 object MinHashSignature {
+  /** Typed Column builder (`minhash_signature` without the SQL registry). */
+  def apply(sh: Column, numHashes: Int): Column =
+    column(new MinHashSignature(expression(sh), numHashes))
+
   /** Deterministic (a_j, b_j) family via splitmix64; a_j forced odd so the
     * multiply is a bijection on Z/2^64. Memoized per numHashes — the
     * generated code calls compute per row.

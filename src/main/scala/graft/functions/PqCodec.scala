@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -31,58 +33,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * in BOTH the vector and the centroid, mirroring the equi-join on
   * `pos`.
   *
-  * Like [[DotProduct]]/[[SrpBands]], instances are built through the
-  * session function registry; the geometry rides the SQL call as
-  * nested `array(...)` literals (≤ ~10 KB of text for the standard
-  * dims=64/cells=16/m=8/ks=16 geometry), evaluated once at plan build.
+  * Operators build these as typed Columns (`PqCodes(xs, dsub, cids,
+  * cents)` etc.) straight from the collected geometry arrays; it is never
+  * rendered as SQL text, and the `pq_*` names are not SQL functions.
   */
 object PqCodec {
-
-  private def longArray(e: Expression): Array[Long] =
-    e.eval().asInstanceOf[ArrayData].toLongArray()
-
-  private def longMatrix(e: Expression): Array[Array[Long]] =
-    e.eval().asInstanceOf[ArrayData]
-      .toObjectArray(ArrayType(LongType))
-      .map(_.asInstanceOf[ArrayData].toLongArray())
-
-  private def longCube(e: Expression): Array[Array[Array[Long]]] =
-    e.eval().asInstanceOf[ArrayData]
-      .toObjectArray(ArrayType(ArrayType(LongType)))
-      .map(_.asInstanceOf[ArrayData]
-        .toObjectArray(ArrayType(LongType))
-        .map(_.asInstanceOf[ArrayData].toLongArray()))
-
-  /** SQL literal text for a geometry array (L-suffixed so the literal
-    * parses as BIGINT, matching [[longArray]]'s decode).
-    */
-  def sqlArr(a: Array[Long]): String =
-    a.map(v => s"${v}L").mkString("array(", ",", ")")
-
-  def sqlMat(m: Array[Array[Long]]): String =
-    m.map(sqlArr).mkString("array(", ",", ")")
-
-  def sqlCube(c: Array[Array[Array[Long]]]): String =
-    c.map(sqlMat).mkString("array(", ",", ")")
-
-  /** Register the codec builders on `reg` (idempotent; the pattern of
-    * [[graft.ops.Similarity]]'s `ensureRegistered`).
-    */
-  def register(
-      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
-    reg.createOrReplaceTempFunction("pq_cell_asg", exprs =>
-      CellArgmin(exprs(0), longArray(exprs(1)), longMatrix(exprs(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("pq_residual", exprs =>
-      CellResidual(exprs(0), exprs(1), longArray(exprs(2)),
-        longMatrix(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("pq_codes", exprs =>
-      PqCodes(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue(),
-        longMatrix(exprs(2)), longCube(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("pq_dist2", exprs =>
-      PqDist2(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue(),
-        longMatrix(exprs(2)), longCube(exprs(3))), "built-in")
-  }
 
   /** Shared exact-integer argmin: index into `cents`/`cn2` (iterated
     * ascending, strict `<` — ties keep the earliest = lowest id) of
@@ -168,6 +123,11 @@ case class CellArgmin(child: Expression, ids: Array[Long],
   override def prettyName: String = "pq_cell_asg"
 }
 
+object CellArgmin {
+  def apply(xs: Column, ids: Array[Long], cents: Array[Array[Long]]): Column =
+    column(new CellArgmin(expression(xs), ids, cents))
+}
+
 /** Residual against an assigned centroid: `xs − cents[cell]` per
   * position — the array-native form of the `(cell_id, pos)` equi-join
   * with `xe − ce`. Positions past the centroid's length pass through
@@ -225,6 +185,12 @@ case class CellResidual(left: Expression, right: Expression,
   override def prettyName: String = "pq_residual"
 }
 
+object CellResidual {
+  def apply(xs: Column, cell: Column, ids: Array[Long],
+            cents: Array[Array[Long]]): Column =
+    column(new CellResidual(expression(xs), expression(cell), ids, cents))
+}
+
 /** Per-subspace PQ code assignment: for each sub s (array index), the
   * cid (from `subCids(s)`, ascending) of the codebook centroid
   * minimizing the exact lattice term over the sub's `dsub`-slice — the
@@ -258,9 +224,9 @@ case class PqCodes(child: Expression, dsub: Int,
   def codes(xs: ArrayData): ArrayData = {
     val m = subCids.length
     // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
-    if (xs.numElements() < m * dsub)
+    if (xs.numElements() != m * dsub)
       throw new IllegalArgumentException(
-        s"pq_codes: vector length ${xs.numElements()} < m·dsub = ${m * dsub}")
+        s"pq_codes: vector length ${xs.numElements()} != m·dsub = ${m * dsub}")
     val out = new Array[Long](m)
     var s = 0
     while (s < m) {
@@ -283,6 +249,12 @@ case class PqCodes(child: Expression, dsub: Int,
     copy(child = c)
 
   override def prettyName: String = "pq_codes"
+}
+
+object PqCodes {
+  def apply(xs: Column, dsub: Int, subCids: Array[Array[Long]],
+            subCents: Array[Array[Array[Long]]]): Column =
+    column(new PqCodes(expression(xs), dsub, subCids, subCents))
 }
 
 /** Per-subspace squared distance to the ASSIGNED codebook centroid:
@@ -314,9 +286,9 @@ case class PqDist2(child: Expression, dsub: Int,
   def dists(xs: ArrayData): ArrayData = {
     val m = subCids.length
     // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
-    if (xs.numElements() < m * dsub)
+    if (xs.numElements() != m * dsub)
       throw new IllegalArgumentException(
-        s"pq_dist2: vector length ${xs.numElements()} < m·dsub = ${m * dsub}")
+        s"pq_dist2: vector length ${xs.numElements()} != m·dsub = ${m * dsub}")
     val out = new Array[Long](m)
     var s = 0
     while (s < m) {
@@ -349,4 +321,10 @@ case class PqDist2(child: Expression, dsub: Int,
     copy(child = c)
 
   override def prettyName: String = "pq_dist2"
+}
+
+object PqDist2 {
+  def apply(xs: Column, dsub: Int, subCids: Array[Array[Long]],
+            subCents: Array[Array[Array[Long]]]): Column =
+    column(new PqDist2(expression(xs), dsub, subCids, subCents))
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -46,6 +48,10 @@ case class ShingleHashes(child: Expression, n: Int)
 }
 
 object ShingleHashes {
+  /** Typed Column builder (`shingle_hashes` without the SQL registry). */
+  def apply(toks: Column, n: Int): Column =
+    column(new ShingleHashes(expression(toks), n))
+
   /** Seed of Spark's `xxhash64` SQL function — keeps hashed shingles
     * join-compatible with any `xxhash64(shingle_string)` column.
     */

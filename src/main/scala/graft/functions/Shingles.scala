@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -37,6 +39,10 @@ case class Shingles(child: Expression, n: Int)
 }
 
 object Shingles {
+  /** Typed Column builder (`graft_shingles` without the SQL registry). */
+  def apply(toks: Column, n: Int): Column =
+    column(new Shingles(expression(toks), n))
+
   private val Space = UTF8String.fromString(" ")
 
   /** Null elements are skipped before windowing — identical semantics to

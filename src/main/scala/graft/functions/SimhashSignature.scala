@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -38,6 +40,10 @@ case class SimhashSignature(child: Expression)
 }
 
 object SimhashSignature {
+  /** Typed Column builder (`simhash_signature` without the SQL registry). */
+  def apply(toks: Column): Column =
+    column(new SimhashSignature(expression(toks)))
+
   def compute(toks: ArrayData): ArrayData = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val sums = new Array[Int](64)

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -53,6 +55,9 @@ case class SrpBands(child: Expression, bands: Int, bitsPerBand: Int)
 }
 
 object SrpBands {
+  /** Typed Column builder (`srp_bands` without the SQL registry). */
+  def apply(v: Column, bands: Int, bitsPerBand: Int): Column =
+    column(new SrpBands(expression(v), bands, bitsPerBand))
 
   /** Sign of hyperplane `plane` at dimension `dim`: true ⇒ +1, false ⇒ −1.
     * Public so oracle generators can mirror the exact same planes.

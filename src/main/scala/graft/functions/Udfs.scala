@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udf
 
@@ -17,52 +18,25 @@ object Udfs {
   val formatLapTimeUdf = udf((ms: java.lang.Long) =>
     if (ms == null) null else LapTimeMillis.format(ms))
 
-  /** Register all extensions on a session:
-    *  - `lap_time_millis(col)`  — native codegen'd Expression
-    *  - `lap_time_udf(col)`     — black-box Scala UDF equivalent
+  /** Register every SQL extension a session lacks: each native function
+    * of [[NativeFunctions.table]], plus the two black-box demos —
+    *  - `lap_time_udf(col)`     — Scala UDF twin of `lap_time_millis`
     *  - `top_k_events(id, score)` — typed Aggregator (bounded top-k heap)
-    *  - `dot_arr(a, b)` / `jaccard_sorted(a, b)` / `graft_shingles(t, n)`
-    *    / `shingle_hashes(t, n)` — the similarity/dedup kernels
+    *
+    * Idempotent and never replacing: a name the session already resolves
+    * (injected by [[graft.GraftExtensions]], or registered by an earlier
+    * call) is left as it is.
     */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "lap_time_millis", exprs => LapTimeMillis(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_arr", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles", exprs => Shingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash_min", exprs => RollingHashMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "srp_bands", exprs => SrpBands(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_sketch_agg",
-      exprs => KllSketchAgg(exprs(0), KllSketch.kArg(exprs)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_merge_agg",
-      exprs => KllMergeAgg(exprs(0), KllSketch.kArg(exprs)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_sketch_quantile",
-      exprs => KllSketchQuantile(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "countmin_agg", exprs => CountMinAgg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "countmin_merge_agg", exprs => CountMinMergeAgg(exprs(0)), "built-in")
-    spark.udf.register("lap_time_udf", formatLapTimeUdf)
-    spark.udf.register("top_k_events",
-      org.apache.spark.sql.functions.udaf(new TopKAggregator(3)))
+    def missing(name: String) = !reg.functionExists(FunctionIdentifier(name))
+    for (f <- NativeFunctions.table if missing(f.name))
+      reg.registerFunction(FunctionIdentifier(f.name), f.info, f.builder)
+    if (missing("lap_time_udf"))
+      spark.udf.register("lap_time_udf", formatLapTimeUdf)
+    if (missing("top_k_events"))
+      spark.udf.register("top_k_events",
+        org.apache.spark.sql.functions.udaf(new TopKAggregator(3)))
   }
 }
 

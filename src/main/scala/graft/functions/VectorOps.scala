@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftRelationalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -44,6 +46,10 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** Typed Column builder (`dot_arr` without the SQL registry). */
+  def apply(a: Column, b: Column): Column =
+    column(new DotProduct(expression(a), expression(b)))
+
   /** Shared by interpreted and generated code; sequential fold order. */
   def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())

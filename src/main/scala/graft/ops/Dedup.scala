@@ -29,44 +29,32 @@ object Dedup {
   /** Distinct n-token shingles of a whitespace-tokenized token array —
     * one compiled pass via [[graft.functions.Shingles]] (the composable
     * `array_distinct(transform(sequence(...)))` form ran interpreted and
-    * dominated the dedup input stage). Callers must have run
-    * [[registerShingleFn]] on the owning session (pipeline entry points
-    * here and in TextStats do).
+    * dominated the dedup input stage).
     */
   def shingles(toks: String, n: Int = 3): Column =
-    expr(s"graft_shingles($toks, $n)")
-
-  /** Register the shingle expression on a session (idempotent). */
-  def registerShingleFn(df: DataFrame): DataFrame = {
-    df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => graft.functions.Shingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    df
-  }
+    graft.functions.Shingles(col(toks), n)
 
   /** Hashed n-shingle set (sorted distinct `array<bigint>`) — the dedup
     * pipelines' canonical shingle representation, via
     * [[graft.functions.ShingleHashes]]: one compiled pass, no shingle
     * strings materialized, ~8 bytes per shingle through every downstream
-    * shuffle/cache instead of the string. Callers must have run
-    * [[registerShingleHashFn]] on the owning session.
+    * shuffle/cache instead of the string.
     */
   def shingleHashes(toks: String, n: Int = 3): Column =
-    expr(s"shingle_hashes($toks, $n)")
+    graft.functions.ShingleHashes(col(toks), n)
 
-  /** Register the hashed-shingle expression on a session (idempotent). */
+  /** Make the native functions resolvable in SQL on the session owning
+    * `df` (idempotent: [[graft.functions.Udfs.registerAll]]). Operators
+    * here do not need it; it serves callers that also write SQL.
+    */
   def registerShingleHashFn(df: DataFrame): DataFrame = {
-    df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => graft.functions.ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
+    graft.functions.Udfs.registerAll(df.sparkSession)
     df
   }
 
   /** (doc key, shingle) long table — the inverted-index layout. */
   def explodeShingles(df: DataFrame, key: String, text: String, n: Int = 3): DataFrame =
-    registerShingleFn(df).withColumn("toks", split(col(text), " "))
+    df.withColumn("toks", split(col(text), " "))
       .withColumn("shingle", explode(shingles("toks", n)))
       .select(col(key), col("shingle"))
 
@@ -91,11 +79,8 @@ object Dedup {
     * family removes the remaining k byte-hashes per shingle).
     */
   def minhashSignatures(docsWithShingles: DataFrame, key: String, numHashes: Int): DataFrame = {
-    docsWithShingles.sparkSession.sessionState.functionRegistry
-      .createOrReplaceTempFunction("minhash_signature",
-        exprs => graft.functions.MinHashSignature(exprs.head, numHashes), "built-in")
     val withSig = docsWithShingles
-      .withColumn("sig", expr("minhash_signature(sh)"))
+      .withColumn("sig", graft.functions.MinHashSignature(col("sh"), numHashes))
     val sigCols = (0 until numHashes).map(j => col("sig").getItem(j).as(s"h$j"))
     withSig.select(col(key) +: sigCols: _*)
   }
@@ -158,9 +143,6 @@ object Dedup {
   def verifyJaccardSides(candidates: DataFrame, shA: DataFrame,
                          shB: DataFrame, key: String, threshold: Double,
                          broadcastB: Boolean = false): DataFrame = {
-    shA.sparkSession.sessionState.functionRegistry
-      .createOrReplaceTempFunction("jaccard_sorted",
-        exprs => graft.functions.JaccardSorted(exprs(0), exprs(1)), "built-in")
     val sa = shA.select(col(key).as("key_a"), col("sh").as("sh_a"))
     val sb0 = shB.select(col(key).as("key_b"), col("sh").as("sh_b"))
     // broadcastB: caller-guaranteed bounded b side AND candidate set
@@ -170,7 +152,7 @@ object Dedup {
     val cand = if (broadcastB) broadcast(candidates) else candidates
     val sb = if (broadcastB) broadcast(sb0) else sb0
     cand.join(sa, "key_a").join(sb, "key_b")
-      .withColumn("jac", expr("jaccard_sorted(sh_a, sh_b)"))
+      .withColumn("jac", graft.functions.JaccardSorted(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= threshold)
       .select(col("key_a"), col("key_b"),
         floor(col("jac") * 1e6).cast("long").as("jaccard_e6"))
@@ -184,7 +166,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, key: String, text: String,
                       numHashes: Int = 32, rowsPerBand: Int = 2,
                       shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", shingleHashes("toks", shingleSize))
       .filter(size(col("sh")) > 0)
@@ -206,7 +188,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, key: String, text: String,
                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", shingleHashes("toks", shingleSize))
       .filter(size(col("sh")) > 0)
@@ -253,7 +235,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, key: String, text: String,
                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", shingleHashes("toks", shingleSize))
       .filter(size(col("sh")) > 0)
@@ -281,8 +263,7 @@ object Dedup {
   def incrementalNearDups(corpus: DataFrame, fresh: DataFrame, key: String,
                           text: String, numHashes: Int = 32, rowsPerBand: Int = 2,
                           shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    def prep(df: DataFrame) = Par.fanOut(
-        registerShingleHashFn(df).select(col(key), col(text)))
+    def prep(df: DataFrame) = Par.fanOut(df.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", shingleHashes("toks", shingleSize))
       .filter(size(col("sh")) > 0)
@@ -324,7 +305,7 @@ object Dedup {
   def contaminationReport(train: DataFrame, evalSet: DataFrame, key: String,
                           text: String, shingleSize: Int = 3): DataFrame = {
     def shingleTable(df: DataFrame, keyAs: String) =
-      registerShingleHashFn(df).select(col(key), col(text))
+      df.select(col(key), col(text))
         .withColumn("toks", split(col(text), " "))
         .select(col(key).as(keyAs),
           explode(shingleHashes("toks", shingleSize)).as("sh"))
@@ -348,12 +329,9 @@ object Dedup {
     * per-doc groups the input already had.
     */
   def simhashChunks(docs: DataFrame, key: String, text: String): DataFrame = {
-    docs.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_signature",
-      exprs => graft.functions.SimhashSignature(exprs.head), "built-in")
     val withSig = docs
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sig", expr("simhash_signature(toks)"))
+      .withColumn("sig", graft.functions.SimhashSignature(col("toks")))
     withSig.select(col(key) +:
       (0 until SimhashChunks).map(c => col("sig").getItem(c).as(s"sh$c")): _*)
   }

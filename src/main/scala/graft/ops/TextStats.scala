@@ -87,7 +87,7 @@ object TextStats {
     * (map-side partial counts, one shuffle on the n-gram).
     */
   def topNgrams(docs: DataFrame, text: String, n: Int, k: Int): DataFrame =
-    Dedup.registerShingleFn(docs).withColumn("toks", tokens(col(text)))
+    docs.withColumn("toks", tokens(col(text)))
       .withColumn("ngram", explode(Dedup.shingles("toks", n)))
       .groupBy(col("ngram"))
       .agg(count(lit(1)).as("n_docs"))
@@ -318,7 +318,7 @@ object TextStats {
     */
   def fingerprints(docs: DataFrame, key: String, text: String,
                    shingleSize: Int = 3): DataFrame =
-    Dedup.registerShingleFn(docs)
+    docs
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", Dedup.shingles("toks", shingleSize))
       .select(

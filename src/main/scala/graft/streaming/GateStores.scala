@@ -78,8 +78,11 @@ private[graft] object GateStores {
     *
     * Batch semantics are unchanged: every task completes (or fails)
     * before this returns, so the enclosing foreachBatch still owns the
-    * batch's commit point, and the first failure rethrows — a failed
-    * store write fails the batch exactly as it did sequentially.
+    * batch's commit point, and any failure rethrows — a failed store
+    * write fails the batch exactly as it did sequentially. A fatal JVM
+    * error (`VirtualMachineError`, e.g. OOM) is rethrown in preference
+    * to any other, whatever order the workers failed in; the remaining
+    * errors ride along as suppressed.
     */
   def inParallel(tasks: Seq[() => Unit]): Unit =
     if (tasks.size <= 1) tasks.foreach(_())
@@ -95,7 +98,13 @@ private[graft] object GateStores {
         th
       }
       threads.foreach(_.join())
-      if (!errs.isEmpty) throw errs.get(0)
+      if (!errs.isEmpty) {
+        val all = errs.toArray(Array.empty[Throwable])
+        val first = all.find(_.isInstanceOf[VirtualMachineError])
+          .getOrElse(all(0))
+        all.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
     }
 
   /** Per-batch store landing. `files = 1` is the fixture default (a

@@ -90,8 +90,7 @@ object IngestGate {
           () => GateStores.maybeCompact(ss, idxDir, upTo = batchId - 1,
             partitionCols = Seq("bgrp")): Unit,
           () => GateStores.maybeCompact(ss, shDir, upTo = batchId - 1): Unit))
-        val withSh = Par.fanOut(
-          Dedup.registerShingleHashFn(batch).select(col("doc_id"), col("text")))
+        val withSh = Par.fanOut(batch.select(col("doc_id"), col("text")))
           .withColumn("toks", split(col("text"), " "))
           .withColumn("sh", Dedup.shingleHashes("toks", 3))
           .filter(size(col("sh")) > 0)

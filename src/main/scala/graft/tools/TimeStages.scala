@@ -19,7 +19,7 @@ object TimeStages {
       println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
     val docs = graft.model.Tables.documents(spark, d)
-    val withSh = Dedup.registerShingleHashFn(docs)
+    val withSh = docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("sh", Dedup.shingleHashes("toks", 3))
       .filter(size(col("sh")) > 0)

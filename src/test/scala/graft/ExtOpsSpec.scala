@@ -45,7 +45,6 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("custom expressions reject wrong input types at analysis time") {
     Udfs.registerAll(spark)
-    graft.ops.Dedup.registerShingleFn(spark.range(1).toDF())
     val dotErr = intercept[Exception] {
       Seq((Array("x"), Array(1.0))).toDF("a", "b")
         .selectExpr("dot_arr(a, b)").collect()

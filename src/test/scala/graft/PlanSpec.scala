@@ -574,7 +574,15 @@ class PlanSpec extends AnyFunSuite {
           |  simhash_signature(array('a','b')),
           |  size(srp_bands(array(1.0d, -2.0d), 4, 2))""".stripMargin).collect().head
       assert(probe.getDouble(0) == 11.0 && probe.getInt(2) == 2)
-      assert(probe.getInt(6) == 4)
+      assert(probe.getInt(4) == 8 && probe.getInt(6) == 4)
+      // an operator's own hash count must not rebind the SQL name: after
+      // a 64-hash signature pass, minhash_signature(sh, 8) still gives 8
+      import s.implicits._
+      val sh = Seq((1L, Seq(1L, 2L, 3L))).toDF("id", "sh")
+      assert(graft.ops.Dedup.minhashSignatures(sh, "id", 64).columns.length == 65)
+      val k = s.sql("SELECT size(minhash_signature(" +
+        "shingle_hashes(array('a','b','c'), 2), 8))").collect().head.getInt(0)
+      assert(k == 8)
     } finally {
       org.apache.spark.sql.SparkSession.setActiveSession(shared)
       org.apache.spark.sql.SparkSession.setDefaultSession(shared)

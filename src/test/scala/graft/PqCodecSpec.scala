@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the array-native PQ codec expressions
@@ -14,9 +13,7 @@ class PqCodecSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  graft.functions.PqCodec.register(spark.sessionState.functionRegistry)
-
-  import graft.functions.PqCodec.{sqlArr, sqlCube, sqlMat}
+  import graft.functions.{CellArgmin, CellResidual, PqCodes, PqDist2}
 
   // deterministic 12-vector, dims=8 lattice fixture; values chosen so
   // several vectors are equidistant between centroids (tie exercise)
@@ -42,11 +39,17 @@ class PqCodecSpec extends AnyFunSuite {
     terms.min._2
   }
 
+  // local mode may surface the row-level throw directly or wrapped in
+  // a SparkException — accept either, require the expression's name
+  private def rootChain(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).toSeq
+
   test("pq_cell_asg matches the brute-force exact-integer argmin") {
     val ids = Array(0L, 3L, 7L)
     val cents = Array(vecOf(0L), vecOf(3L), vecOf(7L))
     val got = vecs.select($"n_id",
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})").as("cell"))
+        CellArgmin($"xs", ids, cents).as("cell"))
       .as[(Long, Long)].collect().toMap
     (0L until 12L).foreach { i =>
       assert(got(i) == refArgmin(vecOf(i), ids, cents),
@@ -60,8 +63,7 @@ class PqCodecSpec extends AnyFunSuite {
     // two IDENTICAL centroids under different ids: every vector ties
     val c = vecOf(1L)
     val got = vecs.select(
-        expr(s"pq_cell_asg(xs, ${sqlArr(Array(2L, 9L))}, " +
-          s"${sqlMat(Array(c, c))})").as("cell"))
+        CellArgmin($"xs", Array(2L, 9L), Array(c, c)).as("cell"))
       .as[Long].collect()
     assert(got.forall(_ == 2L))
   }
@@ -71,10 +73,9 @@ class PqCodecSpec extends AnyFunSuite {
     val cents = Array(vecOf(0L), vecOf(3L))
     val got = vecs
       .select($"n_id", $"xs",
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})").as("cell"))
+        CellArgmin($"xs", ids, cents).as("cell"))
       .select($"n_id", $"cell",
-        expr(s"pq_residual(xs, cell, ${sqlArr(ids)}, ${sqlMat(cents)})")
-          .as("rxs"))
+        CellResidual($"xs", $"cell", ids, cents).as("rxs"))
       .as[(Long, Long, Array[Long])].collect()
     got.foreach { case (i, cell, rxs) =>
       val c = cents(ids.indexOf(cell))
@@ -92,8 +93,7 @@ class PqCodecSpec extends AnyFunSuite {
     val sub1 = Array(tied, tied, vecOf(9L).slice(dsub, dims))
     val cids = Array(Array(10L, 20L, 30L), Array(1L, 2L, 3L))
     val got = vecs.select($"n_id",
-        expr(s"pq_codes(xs, $dsub, ${sqlMat(cids)}, " +
-          s"${sqlCube(Array(sub0, sub1))})").as("codes"))
+        PqCodes($"xs", dsub, cids, Array(sub0, sub1)).as("codes"))
       .as[(Long, Array[Long])].collect()
     got.foreach { case (i, codes) =>
       assert(codes.length == 2)
@@ -152,22 +152,15 @@ class PqCodecSpec extends AnyFunSuite {
     val ids = Array(0L, 3L)
     val cents = Array(vecOf(0L), vecOf(3L))
     val short = Seq((0L, Array(1L, 2L, 3L))).toDF("n_id", "xs")
-    // local mode may surface the row-level throw directly or wrapped in
-    // a SparkException — accept either, require the expression's name
-    def rootChain(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).toSeq
     val e1 = intercept[Exception] {
-      short.select(
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})")).collect()
+      short.select(CellArgmin($"xs", ids, cents)).collect()
     }
     assert(rootChain(e1).exists(_.contains("pq_cell_asg")))
     val dsub = 4
     val subs = Array(vecOf(2L).take(dsub), vecOf(5L).take(dsub))
     val e2 = intercept[Exception] {
-      short.select(
-        expr(s"pq_codes(xs, $dsub, ${sqlMat(Array(Array(1L, 2L)))}, " +
-          s"${sqlCube(Array(subs))})")).collect()
+      short.select(PqCodes($"xs", dsub, Array(Array(1L, 2L)), Array(subs)))
+        .collect()
     }
     assert(rootChain(e2).exists(_.contains("pq_codes")))
   }
@@ -187,5 +180,38 @@ class PqCodecSpec extends AnyFunSuite {
     val (idsOk, centsOk) = graft.ops.Similarity.collectCoarseGeo(dense)
     assert(idsOk.sameElements(Array(0L, 3L)))
     assert(centsOk.forall(_.length == 2))
+  }
+
+  test("fixed-dims contract: vectors longer than m·dsub fail loud instead " +
+      "of ignoring their tail (ADVICE r17)") {
+    val dsub = 4
+    val subs = Array(vecOf(2L).take(dsub), vecOf(5L).take(dsub))
+    val long = Seq((0L, vecOf(0L) :+ 1L)).toDF("n_id", "xs")
+    // m = 2 subspaces of dsub = 4 cover exactly the 8-dim fixture
+    val cids = Array(Array(1L, 2L), Array(1L, 2L))
+    val cents = Array(subs, subs)
+    assert(vecs.select(PqCodes($"xs", dsub, cids, cents)).count() == 12L)
+    val e1 = intercept[Exception] {
+      long.select(PqCodes($"xs", dsub, cids, cents)).collect()
+    }
+    assert(rootChain(e1).exists(_.contains("pq_codes: vector length 9")))
+    val e2 = intercept[Exception] {
+      long.select(PqDist2($"xs", dsub, cids, cents)).collect()
+    }
+    assert(rootChain(e2).exists(_.contains("pq_dist2: vector length 9")))
+  }
+
+  test("collectCoarseGeo rejects a coarse table with a middle pos row " +
+      "missing (ADVICE r17)") {
+    // both cells keep length 3, but cell 3 has no pos-1 row: the hole
+    // would read as 0 in every dot, norm and residual
+    val holed = Seq(
+      (0L, 0, 10L), (0L, 1, 11L), (0L, 2, 12L),
+      (3L, 0, 20L), (3L, 2, 22L)
+    ).toDF("cell_id", "pos", "ce")
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.Similarity.collectCoarseGeo(holed)
+    }
+    assert(e.getMessage.contains("cell 3 has 2 pos rows"))
   }
 }

@@ -1116,4 +1116,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(survivors.get() == 2,
       "non-failing siblings must still complete before the rethrow")
   }
+
+  test("inParallel rethrows a fatal worker error in preference, the " +
+      "others suppressed (ADVICE r17)") {
+    // whichever worker fails first, the OOM is what fails the batch —
+    // it must neither die unobserved in its thread nor hide behind an
+    // ordinary error
+    val e = intercept[OutOfMemoryError] {
+      graft.streaming.GateStores.inParallel(Seq(
+        () => throw new IllegalStateException("store write failed"),
+        () => { Thread.sleep(50); throw new OutOfMemoryError("simulated") }))
+    }
+    assert(e.getMessage == "simulated")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("store write failed"))
+    assert(e.getSuppressed.head.isInstanceOf[IllegalStateException])
+  }
 }
