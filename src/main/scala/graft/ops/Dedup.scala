@@ -158,20 +158,35 @@ object Dedup {
         floor(col("jac") * 1e6).cast("long").as("jaccard_e6"))
   }
 
-  /** Full MinHash-LSH near-dup pipeline over a text table. The shingle
-    * table is persisted (memory-and-disk) because the plan fans out into
-    * the signature branch and two verification branches — without it the
-    * tokenize+shingle scan runs three times.
-    */
-  def minhashLshPairs(docs: DataFrame, key: String, text: String,
-                      numHashes: Int = 32, rowsPerBand: Int = 2,
-                      shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
+  /** `(key, sh)`: the hashed shingle set of every doc that has one. */
+  private def shingleTable(docs: DataFrame, key: String, text: String,
+                           shingleSize: Int = 3): DataFrame =
+    Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
       .withColumn("sh", shingleHashes("toks", shingleSize))
       .filter(size(col("sh")) > 0)
       .select(col(key), col("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Full MinHash-LSH near-dup pipeline over a text table. The shingle
+    * table is persisted (memory-and-disk) and stays cached for the
+    * session: the plan fans out into the signature branch and two
+    * verification branches — without it the tokenize+shingle scan runs
+    * three times. A caller that owns the cache's lifetime caches its own
+    * `(key, sh)` table and calls [[minhashLshPairsOf]].
+    */
+  def minhashLshPairs(docs: DataFrame, key: String, text: String,
+                      numHashes: Int = 32, rowsPerBand: Int = 2,
+                      shingleSize: Int = 3, threshold: Double = 0.5): DataFrame =
+    minhashLshPairsOf(shingleTable(docs, key, text, shingleSize)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      key, numHashes, rowsPerBand, threshold)
+
+  /** [[minhashLshPairs]] over a `(key, sh)` table of non-empty hashed
+    * shingle sets ([[shingleHashes]]); extra columns are ignored.
+    */
+  private[graft] def minhashLshPairsOf(withSh: DataFrame, key: String,
+                                       numHashes: Int = 32, rowsPerBand: Int = 2,
+                                       threshold: Double = 0.5): DataFrame = {
     val sigs = minhashSignatures(withSh, key, numHashes)
     val cands = lshCandidates(sigs, key, numHashes, rowsPerBand)
     verifyJaccard(cands, withSh, key, threshold)
@@ -188,11 +203,8 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, key: String, text: String,
                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"), size(col("sh")).as("sz"))
+    val withSh = shingleTable(docs, key, text, shingleSize)
+      .withColumn("sz", size(col("sh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val inv = withSh.select(col(key), col("sz"), explode(col("sh")).as("shingle"))
     // Global rarest-first order; ties broken by shingle hash so the
@@ -235,11 +247,8 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, key: String, text: String,
                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"), size(col("sh")).cast("long").as("sz"))
+    val withSh = shingleTable(docs, key, text, shingleSize)
+      .withColumn("sz", size(col("sh")).cast("long"))
     val inv = withSh.select(col(key), explode(col("sh")).as("shingle"))
     val a = inv.select(col(key).as("doc_a"), col("shingle"))
     val b = inv.select(col(key).as("doc_b"), col("shingle"))
@@ -263,13 +272,8 @@ object Dedup {
   def incrementalNearDups(corpus: DataFrame, fresh: DataFrame, key: String,
                           text: String, numHashes: Int = 32, rowsPerBand: Int = 2,
                           shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    def prep(df: DataFrame) = Par.fanOut(df.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"))
-    val corpusSh = prep(corpus)
-    val freshSh = prep(fresh)
+    val corpusSh = shingleTable(corpus, key, text, shingleSize)
+    val freshSh = shingleTable(fresh, key, text, shingleSize)
     def banded(sigs: DataFrame) = {
       val numBands = numHashes / rowsPerBand
       val bandCols = (0 until numBands).map { b =>

@@ -396,8 +396,8 @@ object Similarity {
     // the shard-merge key's 100 TB recipe describes. (The former form
     // checkpointed dims×-exploded rows and paid two broadcast-join
     // argmins per batch.)
-    val (ccIds, ccCents) = collectCoarseGeo(cc)
     val (subCids, subCents) = collectCbGeo(cb, dsub)
+    val (ccIds, ccCents) = collectCoarseGeo(cc, subCids.length * dsub)
     latticeVecs(newBatch.select(
         col(key).cast("long").as("n_id"), col(vec)), "n_id", vec)
       .select(col("n_id"), CellArgmin(col("xs"), ccIds, ccCents).as("cell_id"),
@@ -522,9 +522,9 @@ object Similarity {
     * (ids ascending, centroid per id indexed by pos) — `cells`·dims
     * longs, index METADATA by construction (the bounded-collect rule:
     * parameter-sized like [[ivfPqProbeCells]]'s nprobe cells, never
-    * data-sized).
+    * data-sized). Every centroid must have exactly `dims` coordinates.
     */
-  private[graft] def collectCoarseGeo(cc: DataFrame)
+  private[graft] def collectCoarseGeo(cc: DataFrame, dims: Int)
       : (Array[Long], Array[Array[Long]]) = {
     val rows = cc.select(col("cell_id").cast("long"), col("pos").cast("int"),
       col("ce").cast("long")).collect()
@@ -542,12 +542,13 @@ object Similarity {
     // dense-geometry contract (ADVICE r16): a cell missing trailing pos
     // rows (a truncated or hand-landed coarse table) would silently
     // yield a SHORT centroid whose absent coordinates read as 0 in the
-    // dot/norm but pass through unsubtracted in pq_residual — matching
-    // the old inner-join semantics only while every cell is dense. A
-    // corrupt store must fail loudly, not skew residuals.
-    require(cents.nonEmpty && cents.forall(_.length == cents(0).length),
+    // dot/norm but pass through unsubtracted in pq_residual. Checking
+    // against `dims`, not against the other cells, also catches a table
+    // whose cells are all equally short. A corrupt store must fail
+    // loudly, not skew residuals.
+    require(cents.nonEmpty && cents.forall(_.length == dims),
       s"coarse geometry is not dense: centroid lengths " +
-        s"${cents.map(_.length).distinct.mkString(",")} differ across cells")
+        s"${cents.map(_.length).distinct.mkString(",")} for dims=$dims")
     (ids, cents)
   }
 
@@ -1005,7 +1006,7 @@ object Similarity {
     val (ccIds, ccCents) = collectCoarseGeo(
       coarseLattice(pqLattice(corpus.select(
         col(key).cast("long").as("n_id"), col(vec))
-        .filter(col(key) < cells), "n_id", vec, dsub), cells))
+        .filter(col(key) < cells), "n_id", vec, dsub), cells), dims)
     val cc = ccFromGeo(corpus.sparkSession, ccIds, ccCents)
     (qrows, cc, ivfPqCellTerms(qrows, "q_id", cc))
   }

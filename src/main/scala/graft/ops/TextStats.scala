@@ -24,6 +24,14 @@ object TextStats {
 
   def tokens(text: Column): Column = split(text, " ")
 
+  /** `f` of the text's tokens, split once however often `f` uses them:
+    * the one-element `transform` binds the array to a lambda variable,
+    * where an inline `tokens(text)` would be split again at every use
+    * (inside a per-token lambda, once per token).
+    */
+  private def withTokens(text: Column)(f: Column => Column): Column =
+    transform(array(tokens(text)), f).getItem(0)
+
   /** Per-doc token statistics; ratios exported as integer millionths. */
   def textStats(docs: DataFrame, key: String, text: String): DataFrame =
     docs.withColumn("toks", tokens(col(text)))
@@ -61,17 +69,17 @@ object TextStats {
   /** Quality score: 0.5·length-score + 0.3·type-token-ratio + 0.2·long-token
     * share — fixed-order arithmetic, exported as integer millionths.
     */
+  def qualityE6(text: Column): Column = withTokens(text) { toks =>
+    val n = size(toks).cast("double")
+    floor((least(lit(1.0), n / 100.0) * 0.5 +
+      size(array_distinct(toks)).cast("double") / n * 0.3 +
+      size(filter(toks, t => length(t) >= 5)).cast("double") / n * 0.2) * 1e6)
+      .cast("long")
+  }
+
+  /** [[qualityE6]] per doc. */
   def qualityScore(docs: DataFrame, key: String, text: String): DataFrame =
-    docs.withColumn("toks", tokens(col(text)))
-      .withColumn("n_tokens", size(col("toks")).cast("double"))
-      .withColumn("len_score", least(lit(1.0), col("n_tokens") / 100.0))
-      .withColumn("ttr",
-        size(array_distinct(col("toks"))).cast("double") / col("n_tokens"))
-      .withColumn("long_share",
-        size(filter(col("toks"), t => length(t) >= 5)).cast("double") / col("n_tokens"))
-      .select(col(key),
-        floor((col("len_score") * 0.5 + col("ttr") * 0.3 + col("long_share") * 0.2) * 1e6)
-          .cast("long").as("quality_e6"))
+    docs.select(col(key), qualityE6(col(text)).as("quality_e6"))
 
   /** Whitespace token count + regex-segment ("BPE-ish" pre-tokenizer)
     * count: alpha runs, digit runs, and other non-space symbols.
@@ -126,19 +134,24 @@ object TextStats {
       .select(col(key), col("tok"), col("tf"), col("df"), col("tfidf_e4"))
   }
 
+  /** md5 of the key as a 32-bit bucket mod 100. */
+  private def bucketOf(key: Column): Column =
+    pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
+      lit(100L))
+
   /** Deterministic train/val/test assignment by content-independent key
     * hash (md5 → 32-bit bucket mod 100): reproducible across engines,
     * runs, and partitionings — the property random() sampling lacks.
     * Split fractions: [0,80) train, [80,90) val, [90,100) test.
     */
+  def splitOf(key: Column): Column = {
+    val bucket = bucketOf(key)
+    when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+  }
+
+  /** [[splitOf]] per doc, with its bucket. */
   def sampleSplit(docs: DataFrame, key: String): DataFrame =
-    docs.withColumn("bucket",
-        pmod(conv(substring(md5(col(key).cast("string")), 1, 8), 16, 10)
-          .cast("long"), lit(100L)))
-      .select(col(key), col("bucket"),
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "val")
-          .otherwise("test").as("split"))
+    docs.select(col(key), bucketOf(col(key)).as("bucket"), splitOf(col(key)).as("split"))
 
   /** Gopher-style repetition metrics per document: the duplicate-token
     * fraction (1 − distinct/total) and the frequency share of the most
@@ -203,9 +216,10 @@ object TextStats {
       .filter(col("rn") <= perStratum)
   }
 
-  /** Per-doc unigram Shannon entropy (nats) — the distributional quality
-    * signal (low entropy ⇒ repetitive/boilerplate text; pairs with
-    * [[repetitionMetrics]] in a curation filter chain).
+  /** Per-doc unigram Shannon entropy (nats, integer millionths) — the
+    * distributional quality signal (low entropy ⇒ repetitive/boilerplate
+    * text; pairs with [[repetitionMetrics]] in a curation filter chain).
+    * Null when the doc has no tokens (null text).
     *
     * Uses H = ln(n) − (Σ c·ln c)/n. The Σ c·ln c fold runs MAP-SIDE over
     * the doc's own token array in sorted-distinct-token order via
@@ -215,19 +229,19 @@ object TextStats {
     * partition order and could land on the wrong side of the e6 floor).
     * No shuffle at all: at 100 TB this is a pure scan.
     */
+  def entropyE6(text: Column): Column = withTokens(text) { toks =>
+    val n = size(toks)
+    val clogc = aggregate(
+      transform(array_sort(array_distinct(toks)),
+        u => size(filter(toks, x => x === u)).cast("double")),
+      lit(0.0), (acc, c) => acc + c * log(c))
+    when(n > 0, floor((log(n.cast("double")) - clogc / n) * 1e6).cast("long"))
+  }
+
+  /** [[entropyE6]] per doc with at least one token. */
   def tokenEntropy(docs: DataFrame, key: String, text: String): DataFrame =
-    docs.withColumn("toks", tokens(col(text)))
-      .withColumn("n", size(col("toks")))
-      .filter(col("n") > 0)
-      .withColumn("uniq", array_sort(array_distinct(col("toks"))))
-      .withColumn("clogc", expr(
-        """aggregate(
-          |  transform(uniq, u -> cast(size(filter(toks, x -> x = u)) as double)),
-          |  cast(0.0 as double),
-          |  (acc, c) -> acc + c * ln(c))""".stripMargin))
-      .select(col(key), col("n").as("n_tokens"),
-        floor((log(col("n").cast("double")) - col("clogc") / col("n")) * 1e6)
-          .cast("long").as("entropy_e6"))
+    docs.select(col(key), size(tokens(col(text))).as("n_tokens"),
+      entropyE6(col(text)).as("entropy_e6")).filter(col("n_tokens") > 0)
 
   /** Temperature-based mixture sampling: per-stratum quotas proportional
     * to √n (temperature 0.5 smoothing — upweights small sources, damps

@@ -2,13 +2,22 @@ package graft.pipelines
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, TextStats}
+import graft.ops.{Dedup, Par, TextStats}
 
-/** End-to-end LLM training-data curation: quality-gate → exact dedup →
-  * near-dedup → deterministic split assignment. One lineage graph; every
-  * stage is a pure transform, so the whole pipeline is reproducible and
-  * restartable — the composition target the individual operators exist
-  * for.
+/** End-to-end LLM training-data curation: quality gate → entropy gate →
+  * repetition gate → exact dedup → near-dedup → deterministic split
+  * assignment. One lineage graph; every stage is a pure transform, so the
+  * whole pipeline is reproducible and restartable — the composition
+  * target the individual operators exist for.
+  *
+  * Row-local stages are columns, never joins back to the corpus: the
+  * quality and entropy gates are filters on [[TextStats.qualityE6]] and
+  * [[TextStats.entropyE6]], and the split is a projection of
+  * [[TextStats.splitOf]]. (A join of the corpus with a projection of
+  * itself re-plans and re-runs the whole upstream subtree on each side.)
+  * Only the stages that are not row-local join: the repetition gate
+  * (explode + groupBy), exact dedup (a semi join with the lowest key per
+  * text digest) and the near-dup losers.
   */
 object CurationPipeline {
 
@@ -30,39 +39,53 @@ object CurationPipeline {
     *        (maxDupTokenFracE6, maxTopBigramFracE6); docs with fewer than
     *        two tokens have no bigram metrics and are dropped by the gate
     * @param minEntropyE6 optional unigram-entropy floor (nats, millionths)
-    * @return surviving docs with `split` assignment
+    * @return surviving docs with `split` assignment. Nothing is cached:
+    *         the near-dup branches share the fan-out exchange when there
+    *         is one and recompute the corpus otherwise
+    *         ([[curateAndPublish]] caches it for the length of its write)
     */
   def curate(docs: DataFrame, key: String, text: String,
              minQualityE6: Long = 400000L,
              nearDupThreshold: Double = 0.5,
              strategy: NearDupStrategy = Pairwise,
              maxRepetition: Option[(Long, Long)] = None,
-             minEntropyE6: Option[Long] = None): DataFrame = {
-    val quality = TextStats.qualityScore(docs, key, text)
-      .filter(col("quality_e6") >= minQualityE6)
-    val qualityGated = docs.join(quality, Seq(key), "left_semi")
+             minEntropyE6: Option[Long] = None): DataFrame =
+    curated(docs, key, text, minQualityE6, nearDupThreshold, strategy,
+      maxRepetition, minEntropyE6, cache = false)._1
 
-    val repGated = maxRepetition match {
+  /** [[curate]]'s output, and the deduplicated corpus with its shingles
+    * that it reads four times (three near-dup branches and the
+    * survivors). With `cache` that corpus is persisted, and the caller
+    * releases it once the output is written.
+    */
+  private def curated(docs: DataFrame, key: String, text: String,
+                      minQualityE6: Long, nearDupThreshold: Double,
+                      strategy: NearDupStrategy,
+                      maxRepetition: Option[(Long, Long)],
+                      minEntropyE6: Option[Long],
+                      cache: Boolean): (DataFrame, DataFrame) = {
+    val rowGated = docs.filter(TextStats.qualityE6(col(text)) >= minQualityE6 &&
+      minEntropyE6.fold(lit(true))(TextStats.entropyE6(col(text)) >= _))
+    val gated = maxRepetition match {
       case Some((maxDup, maxBigram)) =>
         val keep = TextStats
-          .repetitionMetrics(qualityGated, key, text, maxDup, maxBigram)
+          .repetitionMetrics(rowGated, key, text, maxDup, maxBigram)
           .filter(col("keep")).select(col(key))
-        qualityGated.join(keep, Seq(key), "left_semi")
-      case None => qualityGated
-    }
-    val gated = minEntropyE6 match {
-      case Some(minE) =>
-        val keep = TextStats.tokenEntropy(repGated, key, text)
-          .filter(col("entropy_e6") >= minE).select(col(key))
-        repGated.join(keep, Seq(key), "left_semi")
-      case None => repGated
+        rowGated.join(keep, Seq(key), "left_semi")
+      case None => rowGated
     }
 
-    val exactSurvivors = Dedup.exactDedup(gated, key, text).select(col(key))
-    val afterExact = gated.join(exactSurvivors, Seq(key), "left_semi")
+    val afterExact = gated.join(Dedup.exactDedup(gated, key, text).select(col(key)),
+      Seq(key), "left_semi")
 
-    val nearPairs = Dedup.minhashLshPairs(afterExact, key, text,
-      threshold = nearDupThreshold)
+    val shingles = Par.fanOut(afterExact)
+      .withColumn("toks", split(col(text), " "))
+      .select(col(key), col(text), Dedup.shingleHashes("toks").as("sh"))
+    val shingled = if (cache)
+      shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else shingles
+    val nearPairs = Dedup.minhashLshPairsOf(shingled.filter(size(col("sh")) > 0),
+      key, threshold = nearDupThreshold)
     val losers = strategy match {
       case Pairwise =>
         nearPairs.select(col("doc_b").as(key)).distinct()
@@ -71,10 +94,9 @@ object CurationPipeline {
           .filter(col("node") =!= col("component"))
           .select(col("node").as(key))
     }
-    val survivors = afterExact.join(losers, Seq(key), "left_anti")
-
-    survivors.join(TextStats.sampleSplit(survivors, key), Seq(key))
-      .select(col(key), col(text), col("split"))
+    (shingled.join(losers, Seq(key), "left_anti")
+      .select(col(key), col(text), TextStats.splitOf(col(key)).as("split")),
+      shingled)
   }
 
   /** Full curation run published as a versioned snapshot: the curated
@@ -92,15 +114,17 @@ object CurationPipeline {
                        maxRepetition: Option[(Long, Long)] = None,
                        minEntropyE6: Option[Long] = None): (Long, Map[String, Any]) = {
     val obs = org.apache.spark.sql.Observation()
-    val curated = curate(docs, key, text, minQualityE6, nearDupThreshold,
-        strategy, maxRepetition, minEntropyE6)
-      .observe(obs,
+    val (out, shingled) = curated(docs, key, text, minQualityE6,
+      nearDupThreshold, strategy, maxRepetition, minEntropyE6, cache = true)
+    val observed = out.observe(obs,
         count(lit(1)).as("docs_kept"),
         sum(length(col(text))).as("chars_kept"),
         sum(when(col("split") === "train", 1L).otherwise(0L)).as("n_train"),
         sum(when(col("split") === "val", 1L).otherwise(0L)).as("n_val"),
         sum(when(col("split") === "test", 1L).otherwise(0L)).as("n_test"))
-    val version = graft.ops.Sinks.writeVersioned(curated, path)
-    (version, obs.get)
+    try {
+      val version = graft.ops.Sinks.writeVersioned(observed, path)
+      (version, obs.get)
+    } finally shingled.unpersist()
   }
 }

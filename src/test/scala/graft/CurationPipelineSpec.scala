@@ -1,16 +1,120 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.{Dedup, TextStats}
 import graft.pipelines.CurationPipeline
+import graft.pipelines.CurationPipeline.{Cluster, NearDupStrategy, Pairwise}
 
 /** Integration: the full curation pipeline (quality gate → exact dedup →
   * near-dedup → split) over the real documents table, end to end, twice —
   * asserting determinism and the per-stage invariants.
   */
-class CurationPipelineSpec extends AnyFunSuite {
+class CurationPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark._
   import spark.implicits._
+
+  /** The join formulation of [[CurationPipeline.curate]]: every gate and
+    * the split are semi/inner joins of the corpus with a projection of
+    * itself. The pipeline must return the same rows.
+    */
+  private def curateByJoins(docs: DataFrame, strategy: NearDupStrategy,
+                            maxRepetition: Option[(Long, Long)],
+                            minEntropyE6: Option[Long]): DataFrame = {
+    val (key, text) = ("doc_id", "text")
+    val quality = TextStats.qualityScore(docs, key, text)
+      .filter(col("quality_e6") >= 400000L)
+    val qualityGated = docs.join(quality, Seq(key), "left_semi")
+    val repGated = maxRepetition.fold(qualityGated) { case (maxDup, maxBigram) =>
+      qualityGated.join(TextStats
+        .repetitionMetrics(qualityGated, key, text, maxDup, maxBigram)
+        .filter(col("keep")).select(col(key)), Seq(key), "left_semi")
+    }
+    val gated = minEntropyE6.fold(repGated) { minE =>
+      repGated.join(TextStats.tokenEntropy(repGated, key, text)
+        .filter(col("entropy_e6") >= minE).select(col(key)), Seq(key), "left_semi")
+    }
+    val afterExact = gated.join(Dedup.exactDedup(gated, key, text).select(col(key)),
+      Seq(key), "left_semi")
+    val nearPairs = Dedup.minhashLshPairs(afterExact, key, text, threshold = 0.5)
+    val losers = strategy match {
+      case Pairwise => nearPairs.select(col("doc_b").as(key)).distinct()
+      case Cluster =>
+        Dedup.connectedComponentsStar(nearPairs, "doc_a", "doc_b")
+          .filter(col("node") =!= col("component")).select(col("node").as(key))
+    }
+    val survivors = afterExact.join(losers, Seq(key), "left_anti")
+    survivors.join(TextStats.sampleSplit(survivors, key), Seq(key))
+      .select(col(key), col(text), col("split"))
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, String, String)] =
+    df.as[(Long, String, String)].collect().toSeq.sorted
+
+  private val gateCases = Seq(
+    "no extra gates" -> (None, None),
+    "repetition and entropy gates" -> (Some((600000L, 400000L)), Some(1500000L)))
+
+  for (strategy <- Seq(Pairwise, Cluster); (gates, (rep, ent)) <- gateCases)
+    test(s"curate returns the join formulation's rows: $strategy, $gates") {
+      val docs = graft.model.Tables.documents(spark, sf)
+      val got = rows(CurationPipeline.curate(docs, "doc_id", "text",
+        strategy = strategy, maxRepetition = rep, minEntropyE6 = ent))
+      assert(got.nonEmpty)
+      assert(got == rows(curateByJoins(docs, strategy, rep, ent)))
+    }
+
+  test("curateAndPublish metrics count the join formulation's rows") {
+    val docs = graft.model.Tables.documents(spark, sf)
+    val path = "target/tmp/curated_metrics"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val (_, m) = CurationPipeline.curateAndPublish(docs, "doc_id", "text", path)
+    val want = rows(curateByJoins(docs, Pairwise, None, None))
+    def n(split: String) = want.count(_._3 == split).toLong
+    assert(m == Map("docs_kept" -> want.size.toLong,
+      "chars_kept" -> want.map(_._2.length.toLong).sum,
+      "n_train" -> n("train"), "n_val" -> n("val"), "n_test" -> n("test")))
+  }
+
+  test("curateAndPublish leaves no cached table behind") {
+    // a plan no other test runs, so a table cached by an earlier call
+    // cannot stand in for the one this call would leave
+    val docs = graft.model.Tables.documents(spark, sf).filter($"doc_id" =!= -31L)
+    val path = "target/tmp/curated_release"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    CurationPipeline.curateAndPublish(docs, "doc_id", "text", path)
+    // ids only: the context cleaner may drop older RDDs meanwhile
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
+  test("curate plans no self-join of the corpus") {
+    // The quality gate and the split are a filter and a projection, so
+    // the corpus is scanned for exact dedup's digest aggregate, for the
+    // near-dup branches (which share one fan-out exchange) and for the
+    // anti join with the near-dup losers. The other exchanges belong to
+    // the digest aggregate's semi join, the LSH band self-join and the
+    // verify joins. The join formulation, which also joins the corpus
+    // back to its quality scores and to its split column, planned 22
+    // exchanges and 7 scans here.
+    val out = CurationPipeline.curate(graft.model.Tables.documents(spark, sf),
+      "doc_id", "text")
+    out.collect()
+    // the executed plan, and the plan of each table it reads from cache
+    def nodes(p: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(p) { case n => n }
+    val top = nodes(out.queryExecution.executedPlan)
+    val plan = top ++ top.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+      .distinct.flatMap(nodes)
+    val exchanges = plan.count(_.isInstanceOf[Exchange])
+    val scans = plan.count(_.isInstanceOf[FileSourceScanExec])
+    assert(exchanges <= 10, s"$exchanges exchanges")
+    assert(scans <= 3, s"$scans scans")
+  }
 
   test("keep → budget-mix → pack composes end to end with conserved tokens") {
     // The round's curation ops as one pipeline: rule-filter the corpus,

@@ -172,12 +172,12 @@ class PqCodecSpec extends AnyFunSuite {
       (3L, 0, 20L)
     ).toDF("cell_id", "pos", "ce")
     val e = intercept[IllegalArgumentException] {
-      graft.ops.Similarity.collectCoarseGeo(sparse)
+      graft.ops.Similarity.collectCoarseGeo(sparse, 2)
     }
     assert(e.getMessage.contains("not dense"))
     // and the dense form of the same table passes
     val dense = sparse.union(Seq((3L, 1, 21L)).toDF("cell_id", "pos", "ce"))
-    val (idsOk, centsOk) = graft.ops.Similarity.collectCoarseGeo(dense)
+    val (idsOk, centsOk) = graft.ops.Similarity.collectCoarseGeo(dense, 2)
     assert(idsOk.sameElements(Array(0L, 3L)))
     assert(centsOk.forall(_.length == 2))
   }
@@ -210,8 +210,28 @@ class PqCodecSpec extends AnyFunSuite {
       (3L, 0, 20L), (3L, 2, 22L)
     ).toDF("cell_id", "pos", "ce")
     val e = intercept[IllegalArgumentException] {
-      graft.ops.Similarity.collectCoarseGeo(holed)
+      graft.ops.Similarity.collectCoarseGeo(holed, 3)
     }
     assert(e.getMessage.contains("cell 3 has 2 pos rows"))
+  }
+
+  test("a landed coarse table whose cells are all equally short fails the " +
+      "encode instead of skewing residuals") {
+    // both cells carry 2 of the codebook's dims = m·dsub = 3 coordinates:
+    // the cells agree with each other, so only the dims can expose it
+    val path = "target/tmp/short_coarse"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    Seq((0L, 0, 10L), (0L, 1, 11L), (3L, 0, 20L), (3L, 1, 21L))
+      .toDF("cell_id", "pos", "ce").write.parquet(path)
+    val landed = spark.read.parquet(path)
+    val cb = Seq((0, 0L, 0, 1L), (0, 0L, 1, 2L), (0, 0L, 2, 3L))
+      .toDF("sub", "cid", "pos", "ce")
+    val batch = Seq((7L, Array(0.1, 0.2, 0.3))).toDF("n_id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.Similarity.ivfPqEncode(batch, landed, cb, "n_id", "vec", dsub = 3)
+        .collect()
+    }
+    assert(e.getMessage.contains("centroid lengths 2 for dims=3"))
+    assert(graft.ops.Similarity.collectCoarseGeo(landed, 2)._2.forall(_.length == 2))
   }
 }
